@@ -3453,6 +3453,22 @@ _GATE_OVERRIDE: list[tuple[str, int]] = [
     # so it re-gates ahead of the ranking. Window fits exactly:
     # 1 never-gated (lsh_index_roundtrip) + 1 override + 48 r9 = 50.
     ("part_substitutes", 13),
+    # round 15: the iterative trainers' plans changed — the cluster
+    # queries symmetrize their pair graph in one pass over an unsorted
+    # pair core and run one join + one groupBy per label round;
+    # part_pagerank joins the degree onto the edges once and carries
+    # n_nodes through its per-iteration aggregate. Values are proven
+    # unchanged locally (check_oracle at sf0.001/sf0.01 against the
+    # UNCHANGED oracles). Window fits exactly: 49 r11-evidence queries
+    # (four of them overrides here) + dedup_clusters = 50. No slot is
+    # left for the round-14 plan changes lsh_index_roundtrip (r13
+    # evidence) and customer_rfm (r12); evidence age re-gates them in
+    # r17 and r16.
+    ("embedding_clusters", 15),
+    ("embedding_cluster_stats", 15),
+    ("dedup_clusters", 15),
+    ("dedup_cluster_stats", 15),
+    ("part_pagerank", 15),
 ]
 
 

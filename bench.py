@@ -71,8 +71,11 @@ def main() -> None:
     # first-rep seconds + memo-hit flags keep memoized-trainer timings
     # honest (VERDICT r13 item 6): under best-of-3 a process-level memo
     # (iterative_memo / memo_collect) makes reps 2-3 measure a cache
-    # read; the first rep in this fresh process is the COLD build, and
-    # memo_hits names the queries whose best-of-3 rode memoized state.
+    # read, and memo_hits names the queries whose best-of-3 rode
+    # memoized state. first_rep is NOT a cold number either: earlier
+    # queries in this process have already filled shared memos, caches
+    # and the JIT. Cold per-query costs come from perfbench/, which
+    # runs every pass in a fresh process.
     first_rep: dict[str, float] = {}
     memo_hits: dict[str, list[str]] = {}
     for name, fn in entry_mod.queries().items():

@@ -373,6 +373,13 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     band join dominates and is a plain hash join on a well-distributed
     key.
     """
+    return _minhash_pairs(spark, sf_dir).orderBy("doc_a", "doc_b")
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unsorted (doc_a, doc_b) core of :func:`minhash_lsh_pairs`:
+    consumers that shuffle it anyway (the cluster propagation) skip
+    the global sort."""
     mins = _minhash_signatures(spark, sf_dir)
     band_sigs = [
         F.concat_ws(
@@ -403,7 +410,6 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .distinct()
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -500,32 +506,32 @@ ORACLES["dedup_editdist"] = _sql_editdist()
 
 # -- near-dup clusters (connected components) -------------------------------
 
-# Truncate label lineage every N propagation rounds: each round chains
-# a join onto the plan, and a deep component (long chain graph) makes
-# plan analysis itself the bottleneck long before the data does.
-CHECKPOINT_EVERY = 5
-
-
 def min_label_propagate(edges: DataFrame) -> DataFrame:
     """Min-label propagation to fixpoint over a SYMMETRIC edge list
     (doc_a, doc_b) → (doc_id, label) where label = min reachable id.
 
     The GraphX/Pregel pattern as plain DataFrame joins: each round,
     every vertex takes the min of its own label and its neighbors';
-    fixpoint in O(graph diameter) rounds. Each round is one equi-join
-    shuffle on vertex id; the driver-side convergence probe is a 1-row
-    aggregate (Σlabel strictly decreases until fixpoint under
-    min-propagation), so data never leaves executors. Every
-    CHECKPOINT_EVERY rounds the labels are `localCheckpoint`ed
-    (eager) instead of persisted — materializes AND truncates lineage,
-    keeping the plan O(CHECKPOINT_EVERY) joins deep on arbitrarily
-    deep graphs. (localCheckpoint trades executor-loss recovery for
-    speed — the standard iterative-algorithm choice; a production run
-    on an unreliable cluster would use reliable checkpoint() to a
-    shared FS instead.)
+    fixpoint in O(graph diameter) rounds. A round is ONE join (edges ⋈
+    labels on the source vertex, emitting each neighbor's label as a
+    message) and ONE ``groupBy(doc_id).min`` over labels ∪ messages —
+    the vertex's own label rides the same aggregate as its messages, so
+    no left join re-attaches it.
 
-    Returns a persisted/checkpointed, already-materialized DataFrame;
-    the caller owns releasing it.
+    Every round's labels are ``localCheckpoint(eager=False)``ed: the
+    driver-side convergence probe (a 1-row Σlabel aggregate — Σlabel
+    strictly decreases until fixpoint under min-propagation, so data
+    never leaves executors) is the job that fills the checkpoint, and
+    the next round reads those blocks with a one-node lineage. The plan
+    stays one round deep on arbitrarily deep graphs, and each round
+    costs the same fixed set of jobs. (localCheckpoint trades
+    executor-loss recovery for speed — the standard iterative-algorithm
+    choice; a production run on an unreliable cluster would use
+    reliable checkpoint() to a shared FS instead.)
+
+    Returns a checkpointed, already-materialized DataFrame; superseded
+    rounds' blocks are freed by Spark's ContextCleaner once their
+    frames are unreferenced.
 
     Initialization fuses the FIRST propagation hop into the vertex-set
     aggregation: label₀ = min(self, direct neighbors) is one groupBy
@@ -541,61 +547,49 @@ def min_label_propagate(edges: DataFrame) -> DataFrame:
             F.col("doc_b").alias("doc_id"),
             F.least("doc_b", "nbr_min").alias("label"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    rounds = 0
     while True:
-        rounds += 1
-        msgs = (
-            edges.join(labels, edges["doc_a"] == labels["doc_id"])
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_min"))
+        msgs = edges.join(
+            labels.withColumnRenamed("doc_id", "doc_a"), "doc_a"
+        ).select(F.col("doc_b").alias("doc_id"), "label")
+        labels = (
+            labels.unionByName(msgs)
+            .groupBy("doc_id")
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint(eager=False)
         )
-        new_labels = labels.join(msgs, "doc_id", "left").select(
-            "doc_id",
-            F.least(
-                F.col("label"), F.coalesce("nbr_min", F.col("label"))
-            ).alias("label"),
-        )
-        if rounds % CHECKPOINT_EVERY == 0:
-            # NOTE: unpersist() on a checkpointed frame is a no-op — a
-            # superseded checkpoint's blocks are freed by ContextCleaner
-            # when the Python reference drops (next loop iteration), not
-            # synchronously; at most ⌈rounds/CHECKPOINT_EVERY⌉ label-set
-            # replicas are in flight between GC cycles.
-            new_labels = new_labels.localCheckpoint()
-        else:
-            new_labels = new_labels.persist()
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
-        labels.unpersist()
-        labels = new_labels
+        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
-            break
+            return labels
         prev_sum = cur_sum
-    return labels
 
 
 def components_from_pairs(
     pairs: DataFrame, edge_key: str, memo_key: str, sf_dir: str
 ) -> DataFrame:
-    """Shared connected-components scaffolding: symmetrize a
-    (doc_a, doc_b) pair frame into a cached edge list, run
-    :func:`min_label_propagate`, memoize the fixpoint per sf_dir.
+    """Shared connected-components scaffolding: one pass over the
+    (doc_a, doc_b) pair frame emits both edge directions into a cached
+    edge list, then :func:`min_label_propagate` runs its join + groupBy
+    rounds over it, and the fixpoint is memoized per sf_dir. Pass the
+    UNSORTED pair core: the edge list is shuffled by every round, so a
+    global sort upstream is wasted work.
     ONE definition for the MinHash document clusters and the embedding
     clusters so the propagation setup can never diverge."""
 
     def build() -> DataFrame:
-        edges = bounded_cache(
-            edge_key,
-            pairs.union(
-                pairs.select(
-                    F.col("doc_b").alias("doc_a"),
-                    F.col("doc_a").alias("doc_b"),
-                )
+        # each pair row explodes into (a, b) and (b, a): a union with a
+        # swapped copy would evaluate the whole pair plan once per branch
+        # (Catalyst does not reuse an uncached subtree across a union)
+        both = F.array(
+            F.struct("doc_a", "doc_b"),
+            F.struct(
+                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
             ),
         )
-        return min_label_propagate(edges)
+        edges = pairs.select(F.explode(both).alias("e")).select("e.*")
+        return min_label_propagate(bounded_cache(edge_key, edges))
 
     return iterative_memo(memo_key, sf_dir, build)
 
@@ -614,7 +608,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # including dedup_cluster_stats' reuse and bench's best-of-3 —
     # would re-run the full fixpoint. One memo slot per sf_dir.
     labels = components_from_pairs(
-        minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"),
+        _minhash_pairs(spark, sf_dir),
         "dedup_clusters.edges",
         "dedup.labels",
         sf_dir,

@@ -869,6 +869,13 @@ def embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tuning it re-gates the whole LSH family by design rather than
     silently changing recall.
     """
+    return _embedding_pairs(spark, sf_dir).orderBy("vec_a", "vec_b")
+
+
+def _embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unsorted (vec_a, vec_b, cosine) core of
+    :func:`embedding_dedup_lsh`: consumers that shuffle it anyway (the
+    cluster propagation) skip the global sort."""
     from big_data_parallel_computing_hw2_spark.operators.dedup import (
         COSINE_TAU,
     )
@@ -932,7 +939,6 @@ def embedding_dedup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cosine") >= COSINE_TAU)
         .select("vec_a", "vec_b", "cosine")
         .distinct()
-        .orderBy("vec_a", "vec_b")
     )
 
 
@@ -2407,7 +2413,7 @@ def embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     labels = components_from_pairs(
-        embedding_dedup_lsh(spark, sf_dir).select(
+        _embedding_pairs(spark, sf_dir).select(
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         ),
         "embedding_clusters.edges",

@@ -1059,63 +1059,54 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure DataFrame joins (the PageRank loop of GraphX/Pregel, redone
     Spark-SQL-first so Catalyst plans every step).
 
-    Each iteration is ONE equi-join shuffle (ranks ⋈ edges on src) +
-    one groupBy(dst) — contributions sum in DECIMAL(38,18) so the
-    reduce order can't drift the hash cross-engine. The undirected
-    edge set means no dangling mass. The driver never sees data; node
-    count rides as a broadcast 1-row aggregate. At 100 TB the edge
-    table would be bucketed by src so every iteration reuses one
-    partitioning (zero extra Exchange per step — same layout trick as
-    sources/layout.py bucketing)."""
+    The out-degree and the node count are joined onto the symmetric
+    edge list ONCE, into one cached weighted-edge table. Each iteration
+    is then ONE equi-join (weighted edges ⋈ ranks on src) + ONE
+    groupBy(dst) — contributions sum in DECIMAL(38,18) so the reduce
+    order can't drift the hash cross-engine, and the node count rides
+    through the same aggregate as max(n_nodes), so no per-iteration
+    join re-attaches it. The first iteration skips the join: every
+    node starts at 1/n_nodes. The undirected edge set means no
+    dangling mass and every node is some edge's dst. The driver never
+    sees data. At 100 TB the edge table would be bucketed by src so
+    every iteration reuses one partitioning (zero extra Exchange per
+    step — same layout trick as sources/layout.py bucketing)."""
     def build() -> DataFrame:
         und = _copurchase_pairs(spark, sf_dir)
-        edges = bounded_cache(
-            "pagerank.edges",
-            und.select(
-                F.col("part_a").alias("src"), F.col("part_b").alias("dst")
-            ).unionByName(
-                und.select(
-                    F.col("part_b").alias("src"), F.col("part_a").alias("dst")
-                )
-            ),
+        edges = und.select(
+            F.col("part_a").alias("src"), F.col("part_b").alias("dst")
+        ).unionByName(
+            und.select(F.col("part_b").alias("src"), F.col("part_a").alias("dst"))
         )
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        nodes = bounded_cache(
-            "pagerank.nodes",
-            edges.select(F.col("src").alias("node")).distinct().crossJoin(
-                F.broadcast(
-                    edges.select("src")
-                    .distinct()
-                    .agg(F.count(F.lit(1)).alias("n_nodes"))
-                )
-            ),
+        # the edge set is symmetric, so deg has exactly one row per node
+        n_nodes = F.broadcast(deg.agg(F.count(F.lit(1)).alias("n_nodes")))
+        wedges = bounded_cache(
+            "pagerank.edges", edges.join(deg, "src").crossJoin(n_nodes)
         )
-        ranks = nodes.select(
-            "node",
-            "n_nodes",
-            (F.lit(1.0) / F.col("n_nodes").cast("double")).alias("rank"),
+        # every node starts at rank 1/n_nodes, so the first iteration's
+        # contributions need no join
+        contribs = wedges.withColumn(
+            "rank", F.lit(1.0) / F.col("n_nodes").cast("double")
         )
         d = float(PAGERANK_DAMPING)
-        for _ in range(PAGERANK_ITERS):
-            contribs = (
-                ranks.join(edges, ranks["node"] == edges["src"])
-                .join(deg, "src")
-                .select(
-                    "dst",
-                    (F.col("rank") / F.col("deg").cast("double")).alias("c"),
-                )
-            )
+        for i in range(PAGERANK_ITERS):
+            if i:
+                contribs = wedges.join(ranks, wedges["src"] == ranks["node"])
             ranks = (
                 contribs.groupBy("dst")
                 .agg(
-                    F.sum(F.col("c").cast("decimal(38,18)"))
+                    F.sum(
+                        (F.col("rank") / F.col("deg").cast("double")).cast(
+                            "decimal(38,18)"
+                        )
+                    )
                     .cast("double")
-                    .alias("in_mass")
+                    .alias("in_mass"),
+                    F.max("n_nodes").alias("n_nodes"),
                 )
-                .join(nodes, F.col("dst") == F.col("node"))
                 .select(
-                    "node",
-                    "n_nodes",
+                    F.col("dst").alias("node"),
                     (
                         F.lit(1.0 - d) / F.col("n_nodes").cast("double")
                         + F.lit(d) * F.col("in_mass")

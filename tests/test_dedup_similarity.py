@@ -225,39 +225,88 @@ def test_ngram_jaccard_hot_shingle_cap(spark, sf_dir, monkeypatch):
 
 
 def test_label_propagation_deep_chain_bounded_lineage(spark):
-    """A 24-vertex chain has diameter 23 → ≥12 min-propagation rounds
-    (labels move one hop per round from the min end), forcing multiple
-    localCheckpoint truncations. Result must still be exact (all
-    vertices labeled 0) and the FINAL plan must not have accreted one
-    join per round — lineage is re-rooted at the last checkpoint, so
-    plan size stays bounded by CHECKPOINT_EVERY rounds' worth."""
+    """A chain of n vertices converges in n - 1 rounds (the fused first
+    hop moves every label one hop, each round one more, and one round
+    confirms the fixpoint). Results must be exact (all vertices labeled
+    0); every round must cost the same number of Spark jobs, so the
+    job count grows by a fixed step per added round; and the FINAL plan
+    must not have accreted one join per round — each round's labels
+    are checkpointed, so the fixpoint's plan is smaller than two rounds
+    of the propagation plan."""
     from big_data_parallel_computing_hw2_spark.operators import dedup as dd
 
-    n = 24
-    chain = [(i, i + 1) for i in range(n - 1)]
-    edges = spark.createDataFrame(
-        chain + [(b, a) for a, b in chain], "doc_a long, doc_b long"
-    )
-    labels = dd.min_label_propagate(edges)
-    got = {r["doc_id"]: r["label"] for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-    # single-round plan as the yardstick: the fixpoint plan may carry at
-    # most CHECKPOINT_EVERY rounds of joins over the last checkpoint.
-    one_round = (
-        labels.join(
-            edges.join(labels, edges["doc_a"] == labels["doc_id"])
-            .groupBy(F.col("doc_b").alias("doc_id"))
-            .agg(F.min("label").alias("nbr_min")),
-            "doc_id",
-            "left",
+    sc = spark.sparkContext
+
+    def propagate(n):
+        chain = [(i, i + 1) for i in range(n - 1)]
+        edges = spark.createDataFrame(
+            chain + [(b, a) for a, b in chain], "doc_a long, doc_b long"
         )
+        group = f"label-propagation-chain-{n}"
+        sc.setJobGroup(group, group)
+        try:
+            labels = dd.min_label_propagate(edges)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        got = {r["doc_id"]: r["label"] for r in labels.collect()}
+        assert got == {i: 0 for i in range(n)}
+        # job records arrive through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return edges, labels, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # 7, 11 and 15 rounds: equal steps of 4 rounds must add equal jobs
+    runs = [propagate(n) for n in (8, 12, 16)]
+    jobs = [r[2] for r in runs]
+    edges, labels, _ = runs[-1]
+    step = jobs[1] - jobs[0]
+    assert step > 0 and step % 4 == 0, jobs
+    assert jobs[2] - jobs[1] == step, f"jobs per round grow: {jobs}"
+
+    # single-round plan (join + groupBy over labels ∪ msgs) as the
+    # yardstick for the checkpointed fixpoint's plan
+    msgs = edges.join(
+        labels.withColumnRenamed("doc_id", "doc_a"), "doc_a"
+    ).select(F.col("doc_b").alias("doc_id"), "label")
+    one_round = (
+        labels.unionByName(msgs)
+        .groupBy("doc_id")
+        .agg(F.min("label").alias("label"))
     )
     depth_final = len(labels._jdf.queryExecution().analyzed().toString())
     depth_round = len(one_round._jdf.queryExecution().analyzed().toString())
-    # ~12 un-truncated rounds would be ≫ CHECKPOINT_EVERY× a single
-    # round; the checkpointed plan is a bare scan, far smaller still.
-    assert depth_final < depth_round * (dd.CHECKPOINT_EVERY + 1)
-    labels.unpersist()
+    assert depth_final < depth_round * 2
+
+
+def test_components_from_pairs_reads_pairs_once(spark, tmp_path):
+    """Symmetrizing the pair graph must not evaluate the pair plan
+    twice: the source relation of the pairs appears ONCE in the cached
+    edge frame's optimized plan (a union with a swapped copy would scan
+    it, and recompute everything upstream of it, in each branch)."""
+    from big_data_parallel_computing_hw2_spark.functions import cache
+    from big_data_parallel_computing_hw2_spark.operators import dedup as dd
+
+    src = str(tmp_path / "pairs")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long"
+    ).write.parquet(src)
+    labels = dd.components_from_pairs(
+        spark.read.parquet(src),
+        "test_components.edges",
+        "test_components.labels",
+        str(tmp_path),
+    )
+    try:
+        assert sorted(tuple(r) for r in labels.collect()) == [
+            (1, 1), (2, 1), (3, 1), (5, 5), (6, 5)
+        ]
+        edges = cache._LIVE["test_components.edges"]
+        plan = edges._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count(src) == 1, plan
+        assert sorted(tuple(r) for r in edges.collect()) == [
+            (1, 2), (2, 1), (2, 3), (3, 2), (5, 6), (6, 5)
+        ]
+    finally:
+        cache.release("test_components.edges")
 
 
 def test_approx_knn_recall(spark, sf_dir):

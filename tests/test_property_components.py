@@ -5,8 +5,8 @@ clusters. The oracle gate re-proves it on the driver pair graphs each
 round; this model attacks the loop itself with hypothesis-generated
 graphs against a union-find that shares no code: multi-component
 topologies, stars (fixpoint after the fused first hop), self-loops,
-and deep chains whose convergence must cross the CHECKPOINT_EVERY
-lineage-truncation boundary more than once.
+and deep chains whose convergence runs through many rounds, each one
+reading the previous round's checkpointed labels.
 """
 
 from __future__ import annotations
@@ -58,9 +58,9 @@ def _union_find_labels(edges):
 
 
 @given(edges=_EDGES)
-# a 15-vertex chain: convergence needs ~14 rounds, crossing the
-# CHECKPOINT_EVERY=5 localCheckpoint boundary twice — the shape that
-# catches lineage/caching bugs in the loop plumbing
+# a 15-vertex chain: convergence needs 14 rounds, each reading the
+# previous round's localCheckpoint — the shape that catches
+# lineage/caching bugs in the loop plumbing
 @example(edges=[(i, i + 1) for i in range(14)])
 # two disjoint components + a self-loop singleton
 @example(edges=[(0, 1), (1, 2), (5, 6), (8, 8)])
