@@ -167,8 +167,11 @@ _ROWS_MEMO_CAP = 1024  # tiny rows (boundary arrays); cap is a leak guard
 
 
 def _input_fingerprint(df: DataFrame):
-    """(path, mtime_ns, size) for every input file of the plan, or None
-    when the files can't be enumerated. A None fingerprint still memoizes
+    """(path, mtime_ns, size) for every input file of the plan; () when
+    the plan has no enumerable files; None when a file cannot be
+    fingerprinted (not on a local `file:` path, or `os.stat` fails) —
+    the caller must then not memoize, since regenerated data at the
+    same path would go unseen. An empty fingerprint still memoizes
     safely: plans whose data is NOT visible in the canonicalized plan
     (RDD-backed relations) never canonicalize equal across builds, so
     their semantic hash alone already distinguishes them; plans whose
@@ -178,14 +181,15 @@ def _input_fingerprint(df: DataFrame):
     try:
         files = df.inputFiles()
     except Exception:  # noqa: BLE001 — non-file source
-        return None
+        return ()
     fps = []
     for f in sorted(files):
-        p = f
-        for pre in ("file://", "file:"):
-            if p.startswith(pre):
-                p = p[len(pre):]
-                break
+        if f.startswith("file://"):
+            p = f[len("file://"):]
+        elif f.startswith("file:"):
+            p = f[len("file:"):]
+        else:  # a remote scheme (hdfs://, s3a://, ...)
+            return None
         try:
             st = os.stat(p)
         except OSError:
@@ -211,10 +215,11 @@ def memo_collect(slot: str, df: DataFrame) -> list:
     the interpreter — same discipline as iterative_memo (no cross-run
     artifacts)."""
     h = _sem_hash(df)
-    if h is None:
+    fp = None if h is None else _input_fingerprint(df)
+    if fp is None:
         MEMO_LOG.append((slot, "uncacheable"))
         return df.collect()
-    mk = (slot, h, _input_fingerprint(df))
+    mk = (slot, h, fp)
     rows = _ROWS_MEMO.get(mk)
     if rows is not None:
         MEMO_LOG.append((slot, "hit"))

@@ -14,11 +14,14 @@ array — same shape: file → bands → pixels, with the reference's
 non-zero validity filter.
 
 Scale design: per-file band means are computed **inside the row** with
-`aggregate`/`filter` higher-order functions (JVM, whole-stage codegen,
-zero shuffle, no 64× explode inflation); only the 6-rows-per-file means
-hit the single global aggregation shuffle. At 100 TB the shuffle input
-is ~6 doubles per file regardless of image size — the same property the
-MPI version gets from reducing local scalars.
+`aggregate`/`filter` higher-order functions (JVM, zero shuffle, no 64×
+explode inflation); only the 6-rows-per-file means hit the single
+global aggregation shuffle. The two HOFs are `CodegenFallback`: whole-
+stage codegen evaluates them through the interpreter, one element at a
+time, which is cheap over 8-element slices (the raster source, where a
+band holds every pixel of a file, reduces in numpy instead). At 100 TB
+the shuffle input is ~6 doubles per file regardless of image size — the
+same property the MPI version gets from reducing local scalars.
 """
 
 from __future__ import annotations

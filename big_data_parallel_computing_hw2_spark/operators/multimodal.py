@@ -88,8 +88,8 @@ def decode_image_real(payload: bytes) -> np.ndarray:
 def _try_decode(payload) -> np.ndarray | None:
     """Decode-or-None: one corrupt payload must degrade its own row,
     not fail the task 4× and abort the whole job (same posture as
-    raster.decode_bands, which zeroes unreadable files like the
-    reference does)."""
+    raster._decode_or_none, whose callers zero or skip unreadable
+    files like the reference does)."""
     try:
         return decode_fake_image(payload)
     except (ValueError, struct.error):

@@ -41,11 +41,6 @@ from pyspark.sql import functions as F
 MAGIC = b"FTIF"
 HEADER = struct.Struct("<4sIII")
 
-# schema of the decoded pixel table: one row per (file, band)
-DECODED_SCHEMA = (
-    "path string, band int, width int, height int, pixels array<float>"
-)
-
 
 def encode_fake_tiff(bands: np.ndarray) -> bytes:
     """bands: float32[n_bands, height, width] → FTIF bytes."""
@@ -122,66 +117,63 @@ def read_raster_dir(
     )
 
 
-def decode_bands(binary_df: DataFrame) -> DataFrame:
-    """binaryFile rows → (path, band, width, height, pixels) via an
-    Arrow-batched mapInPandas codec (one Python hop per partition, not
-    per row; pixels stay a flat float array for the agg layer)."""
+def _decode_or_none(payload) -> np.ndarray | None:
+    """Decode-or-None: an unreadable input must not fail its task (and,
+    after retries, the job). NotImplementedError = a real .tif matched
+    the glob in an environment without tifffile — same treatment."""
+    try:
+        return decode_auto(bytes(payload))
+    except (ValueError, struct.error, NotImplementedError):
+        return None
 
-    def codec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "path": [],
-                "band": [],
-                "width": [],
-                "height": [],
-                "pixels": [],
-            }
-            for path, payload in zip(pdf["path"], pdf["content"]):
-                try:
-                    bands = decode_auto(bytes(payload))
-                except (ValueError, struct.error, NotImplementedError):
-                    # reference parity: unreadable files contribute zeroed
-                    # band means, the pipeline continues
-                    # (band_max_computation.cpp:13-16 returns 6 zeros).
-                    # NotImplementedError = a real .tif matched the glob
-                    # in a container without tifffile — same treatment,
-                    # the job must not die on one undecodable input
-                    bands = np.zeros((6, 0, 0), dtype="float32")
-                n_bands, height, width = bands.shape
-                for b in range(n_bands):
-                    out["path"].append(path)
-                    out["band"].append(b + 1)  # GDAL bands are 1-based
-                    out["width"].append(width)
-                    out["height"].append(height)
-                    out["pixels"].append(bands[b].ravel())
-            yield pd.DataFrame(out)
 
-    return binary_df.select("path", "content").mapInPandas(
-        codec, DECODED_SCHEMA
+def _file_band_means(bands: np.ndarray) -> np.ndarray:
+    """float32[n_bands, h, w] → float64[n_bands]: per band, the mean of
+    the non-zero pixels, or 0.0 when there are none. Zeros add nothing
+    to the sum, so the sum over all pixels is the sum over the non-zero
+    ones; NaN counts as non-zero, so a NaN pixel makes its band mean
+    NaN."""
+    flat = bands.reshape(bands.shape[0], -1)
+    sums = flat.sum(axis=1, dtype=np.float64)
+    counts = np.count_nonzero(flat, axis=1)
+    return np.divide(
+        sums, counts, out=np.zeros(len(sums)), where=counts > 0
     )
 
 
 def raster_band_stats(spark: SparkSession, path: str) -> DataFrame:
     """The reference's three programs over real binary inputs: per-file
     per-band mean of non-zero pixels, then global max/min/mean across
-    files (band_{max,min,mean}_computation.cpp semantics; one codec pass
-    + one tiny shuffle of per-file means)."""
-    decoded = decode_bands(read_raster_dir(spark, path))
-    nz = F.filter("pixels", lambda x: x != F.lit(0.0))
-    file_means = decoded.select(
-        "path",
-        "band",
-        F.when(
-            F.size(nz) > 0,
-            F.aggregate(
-                nz,
-                F.lit(0.0),
-                lambda acc, x: acc + x.cast("double"),
+    files (band_{max,min,mean}_computation.cpp semantics).
+
+    Each file is reduced to its band means inside the Arrow codec, as
+    each MPI rank reduces its files to local scalars before the
+    reduction (band_max_computation.cpp:11-50): only 6 doubles per file
+    cross back from the Python worker, never the pixels, and the one
+    tiny shuffle aggregates those."""
+
+    def codec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            paths, band_ids, means = [], [], []
+            for p, payload in zip(pdf["path"], pdf["content"]):
+                bands = _decode_or_none(payload)
+                # reference parity: an unreadable file contributes zeroed
+                # band means and the pipeline continues
+                # (band_max_computation.cpp:13-16 returns 6 zeros)
+                file_means = (
+                    np.zeros(6) if bands is None else _file_band_means(bands)
+                )
+                paths.extend([p] * len(file_means))
+                band_ids.extend(range(1, len(file_means) + 1))  # GDAL: 1-based
+                means.extend(file_means.tolist())
+            yield pd.DataFrame(
+                {"path": paths, "band": band_ids, "file_mean": means}
             )
-            / F.size(nz),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("file_mean"),
+
+    file_means = (
+        read_raster_dir(spark, path)
+        .select("path", "content")
+        .mapInPandas(codec, "path string, band int, file_mean double")
     )
     return (
         file_means.groupBy("band")
@@ -209,14 +201,11 @@ def raster_color_composite(
         for pdf in batches:
             paths, payloads = [], []
             for p, payload in zip(pdf["path"], pdf["content"]):
-                try:
-                    bands = decode_auto(bytes(payload))
-                except (ValueError, struct.error, NotImplementedError):
-                    continue  # undecodable input: skip, keep the job alive
-                if bands.shape[0] < 4:
-                    # composite needs bands 2/3/4 (1-based); a plain RGB
-                    # or single-band file has no band 4 — skip rather
-                    # than emit garbage (reference assumes 6-band input,
+                bands = _decode_or_none(payload)
+                if bands is None or bands.shape[0] < 4:
+                    # undecodable input, or no band 4 (a plain RGB or
+                    # single-band file): skip rather than emit garbage
+                    # (the reference assumes 6-band input,
                     # color_image_composite.cpp:179-182)
                     continue
                 # reference order: output band 1=red(4), 2=green(3), 3=blue(2)
@@ -242,32 +231,32 @@ def write_composites_parquet(composites: DataFrame, out_path: str) -> None:
 
 def materialize_composite_files(composites: DataFrame) -> int:
     """Reference-parity sink: write each composite as its own binary
-    file at the embedded path (color_image_composite.cpp writes
-    `<stem>_color.tif` next to the input). Executor-side
-    foreachPartition — distributed, no driver collect; returns the
-    file count via a count on the same frame.
+    file at its embedded path (color_image_composite.cpp writes
+    `<stem>_color.tif` next to the input) and return how many were
+    written.
+
+    One Arrow-batched `mapInPandas` pass on the executors writes every
+    row of a batch and yields the batch's count; one action collects
+    and sums those counts, so the count is of the files actually
+    written, from the same pass that wrote them (no cache, no second
+    job, no driver collect of the payloads).
 
     Requires a shared filesystem (NFS/FUSE mount) on a real cluster:
     each executor open()s the path locally, so without one the files
     land scattered across executor-local disks. Fine in local mode /
     tests; at scale prefer `write_composites_parquet`."""
 
-    def write_partition(rows):
+    def writer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import os
 
-        for row in rows:
-            parent = os.path.dirname(row["path"])
-            if parent:
-                os.makedirs(parent, exist_ok=True)
-            with open(row["path"], "wb") as fh:
-                fh.write(bytes(row["content"]))
+        for pdf in batches:
+            for p, content in zip(pdf["path"], pdf["content"]):
+                parent = os.path.dirname(p)
+                if parent:
+                    os.makedirs(parent, exist_ok=True)
+                with open(p, "wb") as fh:
+                    fh.write(content)
+            yield pd.DataFrame({"n": [len(pdf)]})
 
-    # persist across the two actions: without it the whole decode/
-    # re-encode pipeline runs twice (once to write, once to count) and
-    # the count could diverge from what was written if inputs change
-    composites = composites.persist()
-    try:
-        composites.foreachPartition(write_partition)
-        return composites.count()
-    finally:
-        composites.unpersist()
+    written = composites.mapInPandas(writer, "n long")
+    return sum(r["n"] for r in written.collect())

@@ -5,6 +5,7 @@ customer_rfm, corpus_quality_vs_dup) oracle-checkable."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -234,3 +235,26 @@ def test_memo_collect_hits_and_invalidates(spark, tmp_path):
     events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.slot"]
     assert events == ["build", "hit", "build"]
     assert r3 != r1
+
+
+@pytest.mark.parametrize(
+    "listed", ["hdfs://nn/warehouse/t.parquet", "file:/no/such/dir/t.parquet"]
+)
+def test_memo_collect_skips_unfingerprintable_inputs(spark, tmp_path, monkeypatch, listed):
+    """An input file that is not on a local path, or that os.stat cannot
+    see, gives no fingerprint: memo_collect must run the plan every time
+    and log "uncacheable", never serve rows keyed on a missing
+    fingerprint (regenerated remote data would go unseen)."""
+    from big_data_parallel_computing_hw2_spark.functions import cache
+
+    p = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,), (2,)], "x int").write.parquet(p)
+    sketch = spark.read.parquet(p).agg(F.max("x").alias("m"))
+    monkeypatch.setattr(sketch, "inputFiles", lambda: [listed])
+
+    n0, memo0 = len(cache.MEMO_LOG), dict(cache._ROWS_MEMO)
+    rows = [cache.memo_collect("test.remote", sketch)[0]["m"] for _ in range(2)]
+    assert rows == [2, 2]
+    events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.remote"]
+    assert events == ["uncacheable", "uncacheable"]
+    assert cache._ROWS_MEMO == memo0

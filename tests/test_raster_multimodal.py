@@ -81,21 +81,101 @@ def test_decode_auto_routes_by_magic(monkeypatch):
     assert raster.decode_auto(b"MM\x00\x2a" + b"\x00" * 8).shape == (1, 4, 5)
 
 
+def _file_means_truth(bands: np.ndarray) -> list[float]:
+    """Per band: mean of the non-zero pixels as float64, 0.0 if none."""
+    means = []
+    for band in bands:
+        px = band.ravel().astype(np.float64)
+        nz = px[px != 0]
+        means.append(nz.sum() / len(nz) if len(nz) else 0.0)
+    return means
+
+
 def test_raster_band_stats_matches_numpy(spark, raster_dir):
     path, truth = raster_dir
     got = {r["band"]: r for r in raster.raster_band_stats(spark, path).collect()}
     assert set(got) == set(range(1, 7))
+    per_file = [_file_means_truth(bands) for bands in truth.values()]
     for b in range(6):
-        means = []
-        for bands in truth.values():
-            px = bands[b].ravel().astype(np.float64)
-            nz = px[px != 0]
-            means.append(nz.sum() / len(nz) if len(nz) else 0.0)
+        means = [m[b] for m in per_file]
         row = got[b + 1]
         assert row["n_files"] == 12
         assert row["band_max"] == pytest.approx(max(means), rel=1e-12)
         assert row["band_min"] == pytest.approx(min(means), rel=1e-12)
         assert row["band_mean"] == pytest.approx(np.mean(means), rel=1e-12)
+
+
+def _plan_nodes(df):
+    """Every node of df's executed plan, through adaptive query stages."""
+    todo, out = [df._jdf.queryExecution().executedPlan()], []
+    while todo:
+        node = todo.pop()
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if kind.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def test_raster_band_stats_edge_cases(spark, tmp_path):
+    """An all-zero band (mean 0.0, not NaN), an unreadable file (6 zero
+    means), a 3-band file (means for bands 1-3 only) and a normal file
+    match numpy truth; the codec hands back per-file means, never a
+    pixel array."""
+    rng = np.random.default_rng(3)
+    normal = rng.uniform(1, 100, size=(6, 7, 9)).astype("float32")
+    normal[normal < 30] = 0.0
+    zero_band = rng.uniform(1, 100, size=(6, 5, 5)).astype("float32")
+    zero_band[2] = 0.0
+    three = rng.uniform(1, 100, size=(3, 4, 4)).astype("float32")
+    for name, bands in (("a", normal), ("b", zero_band), ("c", three)):
+        (tmp_path / f"{name}.ftif").write_bytes(raster.encode_fake_tiff(bands))
+    (tmp_path / "d.ftif").write_bytes(b"FTIF\x06")  # truncated header
+
+    per_file = [
+        _file_means_truth(normal),
+        _file_means_truth(zero_band),
+        _file_means_truth(three),
+        [0.0] * 6,
+    ]
+    assert per_file[1][2] == 0.0
+    df = raster.raster_band_stats(spark, str(tmp_path))
+    got = {r["band"]: r for r in df.collect()}
+    assert set(got) == set(range(1, 7))
+    for b in range(6):
+        means = [m[b] for m in per_file if b < len(m)]
+        row = got[b + 1]
+        assert row["n_files"] == len(means) == (4 if b < 3 else 3)
+        assert row["band_max"] == pytest.approx(max(means), rel=1e-12)
+        assert row["band_min"] == pytest.approx(min(means), rel=1e-12)
+        assert row["band_mean"] == pytest.approx(np.mean(means), rel=1e-12)
+
+    codecs = [
+        n for n in _plan_nodes(df)
+        if n.getClass().getSimpleName() == "MapInPandasExec"
+    ]
+    assert len(codecs) == 1
+    out = codecs[0].output()
+    types = [out.apply(i).dataType().typeName() for i in range(out.size())]
+    assert types == ["string", "integer", "double"]
+
+
+def test_file_band_means_keeps_nan():
+    """NaN is non-zero (as Spark's `x != 0.0` has it), so it poisons
+    its band's mean; an all-zero band is 0.0."""
+    bands = np.ones((3, 2, 2), dtype="float32")
+    bands[0, 0, 0] = np.nan
+    bands[1] = 0.0
+    bands[2, 1, 1] = 0.0
+    means = raster._file_band_means(bands)
+    assert np.isnan(means[0])
+    assert means[1] == 0.0 and means[2] == 1.0
 
 
 def test_raster_color_composite(spark, raster_dir):
@@ -190,6 +270,41 @@ def test_composite_sinks_roundtrip(spark, raster_dir, tmp_path):
         assert os.path.exists(fp)
         rgb = raster.decode_fake_tiff(open(fp, "rb").read())
         assert np.array_equal(rgb, np.stack([bands[3], bands[2], bands[1]]))
+
+
+def test_materialize_composites_counts_what_it_writes(spark, raster_dir, tmp_path):
+    """The sink writes one file per composable input and returns that
+    count from a single Spark job; a corrupt input and a 3-band input
+    (no band 4) are neither written nor counted."""
+    import os
+
+    _, truth = raster_dir
+    src = tmp_path / "in"
+    src.mkdir()
+    for name, bands in list(truth.items())[:3]:
+        (src / name).write_bytes(raster.encode_fake_tiff(bands))
+    (src / "corrupt.ftif").write_bytes(b"FTIF\x06\x00")
+    (src / "rgb.ftif").write_bytes(
+        raster.encode_fake_tiff(np.ones((3, 4, 5), dtype="float32"))
+    )
+    out_dir = str(tmp_path / "out")
+    comp = raster.raster_color_composite(spark, str(src), out_dir)
+
+    sc = spark.sparkContext
+    group = "materialize-composite-files"
+    sc.setJobGroup(group, group)
+    try:
+        n = raster.materialize_composite_files(comp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    written = sorted(os.listdir(out_dir))
+    assert n == len(written) == 3
+    assert written == sorted(
+        f"{name.rsplit('.', 1)[0]}_color.ftif" for name in list(truth)[:3]
+    )
+    # job records arrive through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_multimodal_corrupt_payload_degrades_not_fails(spark):
