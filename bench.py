@@ -28,7 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from big_data_parallel_computing_hw2_spark.functions import cache as _cache
 from big_data_parallel_computing_hw2_spark.session import build_session
 
 # CPU-bound queries whose per-query seconds travel in the compact
@@ -68,19 +67,14 @@ def main() -> None:
     # three runs is the interference-robust estimator; plans, shuffles,
     # and results are identical across runs.
     timings: dict[str, float] = {}
-    # first-rep seconds + memo-hit flags keep memoized-trainer timings
-    # honest (VERDICT r13 item 6): under best-of-3 a process-level memo
-    # (iterative_memo / memo_collect) makes reps 2-3 measure a cache
-    # read, and memo_hits names the queries whose best-of-3 rode
-    # memoized state. first_rep is NOT a cold number either: earlier
-    # queries in this process have already filled shared memos, caches
-    # and the JIT. Cold per-query costs come from perfbench/, which
-    # runs every pass in a fresh process.
+    # first_rep is each query's first of its three reps. It is NOT a
+    # cold number: earlier queries in this process have already warmed
+    # the JIT and filled shared bounded_cache slots. Cold per-query
+    # costs come from perfbench/, which runs every pass in a fresh
+    # process.
     first_rep: dict[str, float] = {}
-    memo_hits: dict[str, list[str]] = {}
     for name, fn in entry_mod.queries().items():
         best, n = float("inf"), 0
-        log0 = len(_cache.MEMO_LOG)
         for i in range(3):
             t0 = time.perf_counter()
             n = len(fn(spark, sf_dir).collect())
@@ -88,9 +82,6 @@ def main() -> None:
             if i == 0:
                 first_rep[name] = round(dt, 3)
             best = min(best, dt)
-        hits = sorted({k for k, ev in _cache.MEMO_LOG[log0:] if ev == "hit"})
-        if hits:
-            memo_hits[name] = hits
         timings[name] = round(best, 3)
         print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
 
@@ -101,7 +92,6 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "first_rep": first_rep,
-        "memo_hits": memo_hits,
         "families": _family_totals(timings),
         "sf": sf,
         "cpus": cpus_effective,

@@ -108,23 +108,16 @@ def with_coarse_bucket(
     gcols = list(group_cols)
     key = F.col(key_col).cast("double")
     if bounds is None:
-        from big_data_parallel_computing_hw2_spark.functions.cache import (
-            memo_collect,
-        )
-
         fracs = [i / n_coarse for i in range(1, n_coarse)]
-        # memo_collect (round 14): the sketch job re-ran on EVERY
-        # invocation of every two-phase consumer (bench alone invokes
-        # each query 3×) although its output only decides bucket
-        # balance, never values — the one collect in the engine that is
-        # provably safe to memoize per (plan hash, input fingerprint).
-        rows = memo_collect(
-            "sketch.bounds",
-            df.groupBy(*gcols).agg(
+        # the sketch only decides bucket balance, never values
+        rows = (
+            df.groupBy(*gcols)
+            .agg(
                 F.percentile_approx(key, fracs, SKETCH_ACCURACY).alias(
                     "_bounds"
                 )
-            ),
+            )
+            .collect()
         )
     if not gcols:
         if bounds is None:

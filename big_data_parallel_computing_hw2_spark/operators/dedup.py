@@ -18,10 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_parallel_computing_hw2_spark.functions import hashing, text
-from big_data_parallel_computing_hw2_spark.functions.cache import (
-    bounded_cache,
-    iterative_memo,
-)
+from big_data_parallel_computing_hw2_spark.functions.cache import bounded_cache
 from big_data_parallel_computing_hw2_spark.functions.aggs import (
     sql_stable_round,
     stable_round,
@@ -566,32 +563,24 @@ def min_label_propagate(edges: DataFrame) -> DataFrame:
         prev_sum = cur_sum
 
 
-def components_from_pairs(
-    pairs: DataFrame, edge_key: str, memo_key: str, sf_dir: str
-) -> DataFrame:
+def components_from_pairs(pairs: DataFrame, edge_key: str) -> DataFrame:
     """Shared connected-components scaffolding: one pass over the
     (doc_a, doc_b) pair frame emits both edge directions into a cached
     edge list, then :func:`min_label_propagate` runs its join + groupBy
-    rounds over it, and the fixpoint is memoized per sf_dir. Pass the
+    rounds over it and returns its checkpointed fixpoint. Pass the
     UNSORTED pair core: the edge list is shuffled by every round, so a
     global sort upstream is wasted work.
     ONE definition for the MinHash document clusters and the embedding
     clusters so the propagation setup can never diverge."""
-
-    def build() -> DataFrame:
-        # each pair row explodes into (a, b) and (b, a): a union with a
-        # swapped copy would evaluate the whole pair plan once per branch
-        # (Catalyst does not reuse an uncached subtree across a union)
-        both = F.array(
-            F.struct("doc_a", "doc_b"),
-            F.struct(
-                F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-            ),
-        )
-        edges = pairs.select(F.explode(both).alias("e")).select("e.*")
-        return min_label_propagate(bounded_cache(edge_key, edges))
-
-    return iterative_memo(memo_key, sf_dir, build)
+    # each pair row explodes into (a, b) and (b, a): a union with a
+    # swapped copy would evaluate the whole pair plan once per branch
+    # (Catalyst does not reuse an uncached subtree across a union)
+    both = F.array(
+        F.struct("doc_a", "doc_b"),
+        F.struct(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")),
+    )
+    edges = pairs.select(F.explode(both).alias("e")).select("e.*")
+    return min_label_propagate(bounded_cache(edge_key, edges))
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,14 +593,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pair graph.
     """
     # the propagation loop EXECUTES during build (driver-side
-    # convergence probes), so without the memo every invocation —
-    # including dedup_cluster_stats' reuse and bench's best-of-3 —
-    # would re-run the full fixpoint. One memo slot per sf_dir.
+    # convergence probes): every call runs the fixpoint once
     labels = components_from_pairs(
-        _minhash_pairs(spark, sf_dir),
-        "dedup_clusters.edges",
-        "dedup.labels",
-        sf_dir,
+        _minhash_pairs(spark, sf_dir), "dedup_clusters.edges"
     )
     return labels.select(
         "doc_id", F.col("label").alias("cluster_id")

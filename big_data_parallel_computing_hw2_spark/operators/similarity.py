@@ -11,7 +11,7 @@ Spark and the DuckDB oracle):
   Hyperplanes are deterministic md5-derived ±1 patterns, so the oracle
   reproduces them exactly.
 - `knn_ivf`: IVF-style coarse quantizer — deterministic seed subset
-  refined by distributed Lloyd iterations (`_ivf_centroids`),
+  refined by distributed Lloyd iterations (`_ivf_index`),
   assign-to-nearest, search the query's cell only.
 """
 
@@ -29,10 +29,7 @@ from big_data_parallel_computing_hw2_spark.functions.aggs import (
     sql_stable_round,
     stable_round,
 )
-from big_data_parallel_computing_hw2_spark.functions.cache import (
-    bounded_cache,
-    iterative_memo,
-)
+from big_data_parallel_computing_hw2_spark.functions.cache import bounded_cache
 from big_data_parallel_computing_hw2_spark.operators.dedup import (
     FAST_COS_MARGIN,
     SQL_NORM2,
@@ -1039,17 +1036,20 @@ def _assign_to(e: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-# Trained tables are lineage-truncated + memoized per (table, sf_dir):
-# see functions.cache.iterative_memo for the driver-time rationale.
-_trained_memo = iterative_memo
-
-
-def _ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained coarse quantizer, lineage-truncated + memoized — see
-    `_trained_memo` and `_ivf_centroids_build`."""
-    return _trained_memo(
-        "ivf.cents", sf_dir, lambda: _ivf_centroids_build(spark, sf_dir)
-    )
+def _ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(assigned, cents): the (vec_id, embedding, norm2, centroid_id)
+    corpus assignment against the TRAINED coarse quantizer, and the
+    quantizer itself (`_ivf_centroids_build`) — one definition for
+    every IVF query, trained once per call. Both tables are
+    `localCheckpoint`ed: a trained table otherwise carries its Lloyd
+    plan chain, and every downstream DataFrame operation re-analyzes
+    that tree on the driver (measured: 7.7 s of driver time per
+    knn_ivf_multiprobe build at sf0.1, vs 1.3 s of execution)."""
+    cents = _ivf_centroids_build(spark, sf_dir).localCheckpoint()
+    assigned = _assign_to(_ivf_corpus(spark, sf_dir), cents).localCheckpoint()
+    return assigned, cents
 
 
 def _ivf_centroids_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1102,20 +1102,6 @@ _ivf_centroids_build.__doc__ = _ivf_centroids_build.__doc__.format(
 )
 
 
-def _ivf_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, embedding, norm2, centroid_id) corpus assignment
-    against the TRAINED centroids, shared by knn_ivf and
-    knn_ivf_multiprobe — one definition + one `_trained_memo` slot, so
-    both probe paths read the same materialized, lineage-flat index."""
-    return _trained_memo(
-        "ivf.assigned",
-        sf_dir,
-        lambda: _assign_to(
-            _ivf_corpus(spark, sf_dir), _ivf_centroids(spark, sf_dir)
-        ),
-    )
-
-
 def ivf_index_delta(
     spark: SparkSession, new_vectors: DataFrame, cents: DataFrame
 ) -> DataFrame:
@@ -1130,7 +1116,7 @@ def ivf_index_delta(
     row-for-row). Re-training the quantizer is the periodic offline
     event that rebuilds the index; between trainings this is the
     production write path. Returns (vec_id, embedding, norm2,
-    centroid_id) — the `_ivf_assigned` shape."""
+    centroid_id) — the `_ivf_index` assignment shape."""
     e = new_vectors.select(
         "vec_id", "embedding", _norm2("embedding").alias("norm2")
     ).filter(F.col("norm2") > 0)
@@ -1150,9 +1136,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus into cells (assign-to-nearest by cosine); queries search only
     their own cell. At scale, cells are the partition key — each probe
     touches 1/n_cells of the data. `assigned` feeds both the query-side
-    filter and the corpus side of the cell join; the shared
-    bounded_cache (see _ivf_assigned) keeps it computed once."""
-    assigned = _ivf_assigned(spark, sf_dir)
+    filter and the corpus side of the cell join; its checkpoint (see
+    _ivf_index) keeps it computed once."""
+    assigned, _ = _ivf_index(spark, sf_dir)
     q = assigned.filter(F.col("vec_id") % QUERY_MOD == 0).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -1173,7 +1159,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ivf_chain() -> str:
-    """DuckDB mirror of `_ivf_centroids` + `_ivf_assigned`: replays the
+    """DuckDB mirror of `_ivf_index`: replays the
     seed subset and every Lloyd iteration (long-form centroid tables
     cents{{t}}(centroid_id, i, val)), ending with `ranked` (every
     vector's full centroid ranking against the trained centroids) and
@@ -1384,12 +1370,6 @@ def pq_index_upsert(existing: DataFrame, delta: DataFrame) -> DataFrame:
     return existing.join(touched, "vec_id", "left_anti").unionByName(delta)
 
 
-def _pq_codebook(sf_dir: str, e: DataFrame) -> DataFrame:
-    """Trained per-subspace codebooks, lineage-truncated + memoized —
-    see `_trained_memo` and `_pq_codebook_build`."""
-    return _trained_memo("pq.cb", sf_dir, lambda: _pq_codebook_build(e))
-
-
 def _pq_codebook_build(e: DataFrame) -> DataFrame:
     """TRAINED per-subspace codebooks: seed each subspace's codebook
     with the vec_id % {mod} subvectors, then run {iters} distributed
@@ -1450,7 +1430,7 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (Jégou et al., TPAMI'11 shape): split
     the {dim}-dim space into {m} subspaces, encode every corpus vector
     as its nearest entry of a TRAINED per-subspace codebook
-    ({subdim}-dim L2, Lloyd-refined — `_pq_codebook`), rank by
+    ({subdim}-dim L2, Lloyd-refined — `_pq_codebook_build`), rank by
     asymmetric distance (query-to-codebook lookups, summed over
     subspaces), exact-rescore the top {rerank} per query.
 
@@ -1467,7 +1447,7 @@ def knn_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", _norm2("embedding").alias("norm2")
         ).filter(F.col("norm2") > 0),
     )
-    cb = _pq_codebook(sf_dir, e)
+    cb = _pq_codebook_build(e).localCheckpoint()
     codes = _pq_encode(e, cb)
     # query-side ADC lookup table: decimal-exact for EVERY codebook
     # entry — tiny (n_queries × n_entries × M) and the oracle sums these
@@ -1520,7 +1500,7 @@ knn_pq.__doc__ = knn_pq.__doc__.format(
 
 
 def _sql_pq_chain(src: str = "embeddings") -> str:
-    """DuckDB mirror of `_pq_codebook` + `_pq_encode`: replays the
+    """DuckDB mirror of `_pq_codebook_build` + `_pq_encode`: replays the
     seed subvector codebooks and every Lloyd iteration (long-form
     cb{{t}}(m, centroid_id, i, val)), ending with `subd` (every
     (vector, subspace, entry) distance against the trained codebook)
@@ -1748,21 +1728,19 @@ def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cost ∝ nprobe/n_cells of the corpus, recall strictly ≥ single
     probe since the nprobe=1 cell is always included).
 
-    Shares the cached corpus assignment with `knn_ivf` (one
-    _ivf_assigned definition → one CacheManager entry by construction);
-    only the QUERY side re-ranks centroids — derived from the CACHED
-    assignment, not a fresh scan — and the query set is small by
-    construction, so the extra window is |queries|×|centroids| rows —
-    trivial at any scale."""
-    assigned = _ivf_assigned(spark, sf_dir)
-    # probe side reads straight from the cached assignment: no parquet
-    # re-scan, no decimal-norm recompute
+    Same `_ivf_index` definition as `knn_ivf`; only the QUERY side
+    re-ranks centroids — derived from the checkpointed assignment, not
+    a fresh scan — and the query set is small by construction, so the
+    extra window is |queries|×|centroids| rows — trivial at any
+    scale."""
+    # trained centroids are Lloyd means, NOT corpus members — read the
+    # trained table, never a vec_id filter of the assignment
+    assigned, cents = _ivf_index(spark, sf_dir)
+    # probe side reads straight from the checkpointed assignment: no
+    # parquet re-scan, no decimal-norm recompute
     qraw = assigned.select("vec_id", "embedding", "norm2").filter(
         F.col("vec_id") % QUERY_MOD == 0
     )
-    # trained centroids are Lloyd means, NOT corpus members — read the
-    # cached trained table, never a vec_id filter of the assignment
-    cents = _ivf_centroids(spark, sf_dir)
     ccos = _ivf_centroid_cos()
     wq = Window.partitionBy("vec_id").orderBy(
         F.desc_nulls_last("__ccos"), "centroid_id"
@@ -1835,14 +1813,12 @@ IVFPQ_NPROBE = 6  # coarse cells probed per query (tuned: see recall test)
 IVFPQ_RERANK = 2 * PQ_RERANK
 
 
-def _ivfpq_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivfpq_residuals(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cell, embedding=residual) for every corpus vector:
-    x − centroid(cell(x)) against the TRAINED coarse quantizer — the
-    signal the per-subspace codebooks quantize in IVF-PQ (residuals
-    have far less energy than raw vectors, so the same codebook budget
-    buys finer quantization; Jégou '11 §III)."""
-    assigned = _ivf_assigned(spark, sf_dir)
-    cents = _ivf_centroids(spark, sf_dir)
+    x − centroid(cell(x)) against the TRAINED coarse quantizer
+    (`_ivf_index`) — the signal the per-subspace codebooks quantize in
+    IVF-PQ (residuals have far less energy than raw vectors, so the
+    same codebook budget buys finer quantization; Jégou '11 §III)."""
     return bounded_cache(
         "ivfpq.res",
         assigned.join(
@@ -1857,18 +1833,13 @@ def _ivfpq_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _ivfpq_codebook(res: DataFrame) -> DataFrame:
     """Residual PQ codebooks (shared across cells — the FAISS IVFPQ
     default; a per-cell variant is the same plan with `cell` as an
     extra group key), trained by the SAME `_pq_codebook_build` Lloyd
-    loop knn_pq uses, just over the residual table."""
-    return _trained_memo(
-        "ivfpq.cb",
-        sf_dir,
-        lambda: _pq_codebook_build(
-            _ivfpq_residuals(spark, sf_dir).select("vec_id", "embedding")
-        ),
-    )
+    loop knn_pq uses, just over the `_ivfpq_residuals` table."""
+    cb = _pq_codebook_build(res.select("vec_id", "embedding"))
+    return cb.localCheckpoint()
 
 
 def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1892,10 +1863,9 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-stable recipe, so the DuckDB oracle replays the whole
     composite — coarse Lloyd, residuals, residual-codebook Lloyd, LUT,
     ADC, rescore — bit-for-bit."""
-    assigned = _ivf_assigned(spark, sf_dir)
-    cents = _ivf_centroids(spark, sf_dir)
-    res = _ivfpq_residuals(spark, sf_dir)
-    cb = _ivfpq_codebook(spark, sf_dir)
+    assigned, cents = _ivf_index(spark, sf_dir)
+    res = _ivfpq_residuals(assigned, cents)
+    cb = _ivfpq_codebook(res)
     codes = _pq_encode(res.select("vec_id", "embedding"), cb).join(
         res.select("vec_id", "cell"), "vec_id"
     ).select("vec_id", "cell", "m", F.col("centroid_id").alias("code"))
@@ -2325,9 +2295,9 @@ def embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return w.join(F.broadcast(mu), "pos").select("pos", "mu", "w")
 
-    # iteratively derived -> memoized + lineage-truncated (same
-    # discipline as the Lloyd-trained centroids/codebooks)
-    w_mu = iterative_memo("pca.w", sf_dir, build)
+    # iteratively derived -> lineage-truncated (same discipline as the
+    # Lloyd-trained centroids/codebooks)
+    w_mu = build().localCheckpoint()
     return (
         w_mu.select(
             "pos",
@@ -2406,8 +2376,8 @@ def embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same min-label propagation loop as the MinHash document clusters
     (`dedup.min_label_propagate`), over a different candidate graph.
 
-    Iteratively derived → memoized + lineage-truncated per sf_dir, so
-    downstream consumers and repeat invocations reuse the fixpoint."""
+    The fixpoint comes back checkpointed (lineage-flat), so
+    downstream consumers read materialized labels."""
     from big_data_parallel_computing_hw2_spark.operators.dedup import (
         components_from_pairs,
     )
@@ -2417,8 +2387,6 @@ def embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
         ),
         "embedding_clusters.edges",
-        "embedding.labels",
-        sf_dir,
     )
     return labels.select(
         F.col("doc_id").alias("vec_id"), F.col("label").alias("cluster_id")
@@ -2450,7 +2418,7 @@ def embedding_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-size histogram over the embedding near-dup components —
     the semantic-dedup report (how much of the embedding space
     collapses, in what clump sizes), mirroring dedup_cluster_stats on
-    the cosine graph. Two tiny aggregates over the memoized labels."""
+    the cosine graph. Two tiny aggregates over the checkpointed labels."""
     labels = embedding_clusters(spark, sf_dir)
     sizes = labels.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -2498,9 +2466,9 @@ def embedding_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick is `localCheckpoint`ed: every step references the prior picks
     TWICE (anti-join + max-sim join), so lazy lineage would grow ~3×
     per step and the analyzed tree OOMs a default-1g driver at k=5;
-    checkpointing makes each step's plan O(rel + pairs), and
-    `iterative_memo` hands repeat invocations (bench 3×) the same
-    materialized fixpoint. No driver collect; at 100 TB the per-step
+    checkpointing makes each step's plan O(rel + pairs), and the
+    final picks are checkpointed once more so the report reads one
+    materialized table. No driver collect; at 100 TB the per-step
     tables stay (n_queries × {cand})-sized.
 
     All scores are decimal-rounded to 6 digits BEFORE comparisons, so
@@ -2632,7 +2600,7 @@ def embedding_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
             picks = picks.unionByName(pick_i.localCheckpoint())
         return picks
 
-    picks = iterative_memo("mmr.picks", sf_dir, _greedy)
+    picks = _greedy().localCheckpoint()
     return picks.select(
         "query_id",
         F.col("neighbor_id").alias("vec_id"),
@@ -3064,13 +3032,12 @@ def embedding_ivf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell means probes scan too much or recall leaks; the ops-side
     companion of knn_recall_report's quality eval).
 
-    Rides the SAME memoized assignment + trained centroids as the
-    probe paths (zero new training work); the per-cell report is one
+    Reads the SAME `_ivf_index` assignment + trained centroids as the
+    probe paths; the per-cell report is one
     aggregate over the assignment joined with the broadcast centroid
     table, cosines through the shared decimal-stable recipe — cell
     count rows out, corpus-sized rows in, exactly once."""
-    assigned = _ivf_assigned(spark, sf_dir)
-    cents = _ivf_centroids(spark, sf_dir)
+    assigned, cents = _ivf_index(spark, sf_dir)
     total = F.broadcast(
         assigned.agg(F.count(F.lit(1)).alias("n_total"))
     )

@@ -18,10 +18,7 @@ from big_data_parallel_computing_hw2_spark.functions.aggs import (
     sql_stable_round,
     stable_round,
 )
-from big_data_parallel_computing_hw2_spark.functions.cache import (
-    bounded_cache,
-    iterative_memo,
-)
+from big_data_parallel_computing_hw2_spark.functions.cache import bounded_cache
 from big_data_parallel_computing_hw2_spark.functions.distributed import (
     global_rank,
     running_sum,
@@ -1765,43 +1762,14 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax pair — same accepted class as sketch boundaries); its
     literals feed the next iteration's replace, exactly as the
     oracle's chained-CTE scalar subqueries replay it."""
-    return _bpe_trained(spark, sf_dir)[0]
+    rows, _ = _bpe_train(spark, sf_dir)
+    return spark.createDataFrame(rows, _BPE_STEP_SCHEMA)
 
 
 _BPE_STEP_SCHEMA = (
     "step int, left_sym string, right_sym string, merged string,"
     " pair_count bigint, n_words int"
 )
-
-
-def _bpe_trained(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """Memoized (merge-steps frame, final merged vocab) — the
-    iteratively-derived pair behind bpe_train_merges and
-    bpe_compression. Same discipline as the Lloyd-trained
-    centroids/codebooks: without the memo every re-invocation
-    re-executed the BPE_MERGE_STEPS-step driver loop (pair count +
-    argmax collect per step) and left an O(steps) lineage for
-    downstream re-analysis. Values unchanged — the checkpoint stores
-    exactly what the deterministic trainer computed."""
-    state: dict[str, DataFrame] = {}
-
-    def build_steps() -> DataFrame:
-        rows, vocab = _bpe_train(spark, sf_dir)
-        state["vocab"] = vocab
-        return spark.createDataFrame(rows, _BPE_STEP_SCHEMA)
-
-    def build_vocab() -> DataFrame:
-        # normally filled by build_steps in the same miss; the fallback
-        # re-train covers a steps-hit/vocab-miss skew (eviction)
-        if "vocab" in state:
-            return state["vocab"]
-        return _bpe_train(spark, sf_dir)[1]
-
-    steps = iterative_memo("bpe.steps", sf_dir, build_steps)
-    vocab = iterative_memo("bpe.final_vocab", sf_dir, build_vocab)
-    return steps, vocab
 
 
 def _bpe_train(
@@ -1952,11 +1920,11 @@ def bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_train_merges' output, closing the train→apply loop).
 
     Scale shape: merges are trained once on the GLOBAL vocab (the
-    shared MEMOIZED trainer output — see _bpe_trained), and
+    shared `_bpe_train` loop, whose final vocab is checkpointed), and
     application is a broadcast-sized join of the per-source vocabulary
     against the merged segmentation — all merge math stays on vocab
     tables, the corpus is touched only by the two token explodes."""
-    _, final = _bpe_trained(spark, sf_dir)
+    final = _bpe_train(spark, sf_dir)[1].localCheckpoint()
     d = fan_out(spark, load_table(spark, sf_dir, "documents"), 16)
     vocab_src = (
         d.select("source", F.explode(text.tokens()).alias("word"))

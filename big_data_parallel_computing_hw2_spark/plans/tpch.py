@@ -32,10 +32,7 @@ from big_data_parallel_computing_hw2_spark.functions.aggs import (
     sql_stable_round,
     stable_round,
 )
-from big_data_parallel_computing_hw2_spark.functions.cache import (
-    bounded_cache,
-    iterative_memo,
-)
+from big_data_parallel_computing_hw2_spark.functions.cache import bounded_cache
 from big_data_parallel_computing_hw2_spark.functions.distributed import (
     global_rank,
     running_sum,
@@ -1115,10 +1112,10 @@ def part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return ranks
 
-    # iteratively derived -> memoized + lineage-truncated (same
-    # discipline as the Lloyd-trained centroids; kills the O(rounds)
-    # re-analysis on every re-invocation)
-    ranks = iterative_memo("pagerank.ranks", sf_dir, build)
+    # iteratively derived -> lineage-truncated (same discipline as the
+    # Lloyd-trained centroids; kills the O(rounds) re-analysis of every
+    # downstream operation)
+    ranks = build().localCheckpoint()
     return (
         ranks.select("node", stable_round("rank", 9).alias("pagerank"))
         .orderBy(F.desc("pagerank"), "node")
@@ -1187,30 +1184,21 @@ def customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         SKETCH_ACCURACY,
     )
 
-    from big_data_parallel_computing_hw2_spark.functions.cache import (
-        memo_collect,
-    )
-
     fracs = [i / DEFAULT_COARSE for i in range(1, DEFAULT_COARSE)]
-    # memo_collect (round 14): balance-only boundary sketch — any
-    # bounds yield identical ranks/scores, so memoizing the collected
-    # row per (plan hash, input fingerprint) is value-safe and removes
-    # the per-invocation sketch job (see functions/cache.memo_collect).
-    sk = memo_collect(
-        "rfm.sketch",
-        per_cust.agg(
-            *[
-                F.percentile_approx(
-                    c.cast("double"), fracs, SKETCH_ACCURACY
-                ).alias(a)
-                for c, a in (
-                    (F.col("recency_days"), "br"),
-                    (-F.col("frequency"), "bf"),
-                    (-F.col("monetary"), "bm"),
-                )
-            ]
-        ),
-    )[0]
+    # balance-only boundary sketch: any bounds yield identical
+    # ranks/scores
+    sk = per_cust.agg(
+        *[
+            F.percentile_approx(
+                c.cast("double"), fracs, SKETCH_ACCURACY
+            ).alias(a)
+            for c, a in (
+                (F.col("recency_days"), "br"),
+                (-F.col("frequency"), "bf"),
+                (-F.col("monetary"), "bm"),
+            )
+        ]
+    ).collect()[0]
     r_r = global_rank(
         per_cust.select("o_custkey", "recency_days"),
         ["recency_days", "o_custkey"],

@@ -5,7 +5,6 @@ customer_rfm, corpus_quality_vs_dup) oracle-checkable."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -163,7 +162,7 @@ def test_two_phase_equals_reference_on_arbitrary_data(
             assert got_run[(g, uid)] == acc
 
 
-# -- round 14: literal-map null group keys + sketch-bounds memo --------------
+# -- round 14: literal-map null group keys -----------------------------------
 
 
 def test_literal_map_skips_null_group_keys(spark):
@@ -200,61 +199,3 @@ def test_literal_map_all_null_groups_degenerates_to_bucket0(spark):
     )
     got = with_coarse_bucket(df, "k", ["g"], n_coarse=4).collect()
     assert {r["_coarse"] for r in got} == {0}
-
-
-def test_memo_collect_hits_and_invalidates(spark, tmp_path):
-    """memo_collect returns the saved rows for an identical plan over
-    unchanged files, and rebuilds when the files at the same path are
-    regenerated (mtime/size fingerprint)."""
-    import time as _time
-
-    from big_data_parallel_computing_hw2_spark.functions import cache
-
-    p = str(tmp_path / "t.parquet")
-    spark.createDataFrame([(1,), (2,)], "x int").write.mode(
-        "overwrite"
-    ).parquet(p)
-
-    def sketch():
-        return (
-            spark.read.parquet(p)
-            .agg(F.percentile_approx("x", [0.5], 100).alias("b"))
-        )
-
-    n0 = len(cache.MEMO_LOG)
-    r1 = cache.memo_collect("test.slot", sketch())
-    r2 = cache.memo_collect("test.slot", sketch())
-    assert r2 == r1
-    events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.slot"]
-    assert events == ["build", "hit"]
-    _time.sleep(0.05)  # ensure a distinct mtime_ns
-    spark.createDataFrame([(10,), (20,), (30,)], "x int").write.mode(
-        "overwrite"
-    ).parquet(p)
-    r3 = cache.memo_collect("test.slot", sketch())
-    events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.slot"]
-    assert events == ["build", "hit", "build"]
-    assert r3 != r1
-
-
-@pytest.mark.parametrize(
-    "listed", ["hdfs://nn/warehouse/t.parquet", "file:/no/such/dir/t.parquet"]
-)
-def test_memo_collect_skips_unfingerprintable_inputs(spark, tmp_path, monkeypatch, listed):
-    """An input file that is not on a local path, or that os.stat cannot
-    see, gives no fingerprint: memo_collect must run the plan every time
-    and log "uncacheable", never serve rows keyed on a missing
-    fingerprint (regenerated remote data would go unseen)."""
-    from big_data_parallel_computing_hw2_spark.functions import cache
-
-    p = str(tmp_path / "t.parquet")
-    spark.createDataFrame([(1,), (2,)], "x int").write.parquet(p)
-    sketch = spark.read.parquet(p).agg(F.max("x").alias("m"))
-    monkeypatch.setattr(sketch, "inputFiles", lambda: [listed])
-
-    n0, memo0 = len(cache.MEMO_LOG), dict(cache._ROWS_MEMO)
-    rows = [cache.memo_collect("test.remote", sketch)[0]["m"] for _ in range(2)]
-    assert rows == [2, 2]
-    events = [ev for k, ev in cache.MEMO_LOG[n0:] if k == "test.remote"]
-    assert events == ["uncacheable", "uncacheable"]
-    assert cache._ROWS_MEMO == memo0

@@ -77,7 +77,7 @@ def test_index_roundtrip_and_partition_pruning(spark, sf_dir, tmp_path):
 
 
 def test_ivf_incremental_assignment_equals_rebuild(spark, sf_dir):
-    cents = S._ivf_centroids(spark, sf_dir)
+    _, cents = S._ivf_index(spark, sf_dir)
     e = _corpus(spark, sf_dir)
     full = S._assign_to(e, cents)
     vecs = e.select("vec_id", "embedding")
@@ -105,7 +105,7 @@ def test_ivf_incremental_assignment_equals_rebuild(spark, sf_dir):
 
 def test_pq_incremental_encode_equals_rebuild(spark, sf_dir):
     e = _corpus(spark, sf_dir)
-    cb = S._pq_codebook(sf_dir, e)
+    cb = S._pq_codebook_build(e).localCheckpoint()
     vecs = e.select("vec_id", "embedding")
     full = S._pq_encode(vecs, cb)
     merged = S.pq_index_upsert(

@@ -64,8 +64,7 @@ def _fresh_session(tag: str):
     persist/unpersist cycles and has hit a Spark-internal NPE
     (recacheByPlan on a plan whose session reference died) ~30k stages
     in (round-12 postmortem). Session-per-SF bounds that churn, and
-    bounded_cache/iterative_memo both rebuild cleanly after a
-    restart."""
+    bounded_cache rebuilds cleanly after a restart."""
     from pyspark.sql import SparkSession
 
     active = SparkSession.getActiveSession()
