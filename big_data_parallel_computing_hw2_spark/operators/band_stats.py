@@ -68,45 +68,11 @@ def per_file_band_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _global(spark: SparkSession, sf_dir: str, agg: F.Column, alias: str) -> DataFrame:
-    fm = per_file_band_means(spark, sf_dir)
-    return (
-        fm.groupBy("band")
-        .agg(stable_round(agg, ROUND_DIGITS).alias(alias))
-        .orderBy("band")
-    )
-
-
-def band_max(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global MAX of per-file band means (band_max_computation.cpp)."""
-    return _global(spark, sf_dir, F.max("file_mean"), "band_max")
-
-
-def band_min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global MIN of per-file band means (band_min_computation.cpp)."""
-    return _global(spark, sf_dir, F.min("file_mean"), "band_min")
-
-
-def band_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global MEAN of per-file band means (band_mean_computation.cpp:
-    MPI_Reduce SUM / nprocs·files)."""
-    fm = per_file_band_means(spark, sf_dir)
-    return (
-        fm.groupBy("band")
-        .agg(
-            stable_round(
-                F.sum(F.col("file_mean").cast("decimal(38,6)")).cast("double")
-                / F.count(F.lit(1)),
-                ROUND_DIGITS,
-            ).alias("band_mean")
-        )
-        .orderBy("band")
-    )
-
-
 def band_stats_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All three reference programs fused into one pass: max+min+mean of
-    per-file band means plus file count, one shuffle total."""
+    per-file band means plus file count, one shuffle total. The
+    single-statistic programs below select one column of it; Catalyst
+    prunes the unused aggregates, so each plans as its own groupBy."""
     fm = per_file_band_means(spark, sf_dir)
     return (
         fm.groupBy("band")
@@ -122,6 +88,22 @@ def band_stats_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("band")
     )
+
+
+def band_max(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global MAX of per-file band means (band_max_computation.cpp)."""
+    return band_stats_all(spark, sf_dir).select("band", "band_max")
+
+
+def band_min(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global MIN of per-file band means (band_min_computation.cpp)."""
+    return band_stats_all(spark, sf_dir).select("band", "band_min")
+
+
+def band_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Global MEAN of per-file band means (band_mean_computation.cpp:
+    MPI_Reduce SUM / nprocs·files)."""
+    return band_stats_all(spark, sf_dir).select("band", "band_mean")
 
 
 def color_composite(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -236,21 +236,6 @@ def write_rewrite_manifest(table_dir: str, compacted: list[dict]) -> str:
     return path
 
 
-def read_rewrite_manifests(table_dir: str) -> list[dict]:
-    """All rewrite records ever written for this table dir, oldest
-    file first (manifest files are immutable once renamed in)."""
-    maint_dir = os.path.join(table_dir, MAINT_DIR)
-    if not os.path.isdir(maint_dir):
-        return []
-    out: list[dict] = []
-    for f in sorted(os.listdir(maint_dir)):
-        if not (f.startswith("rewrite-") and f.endswith(".json")):
-            continue
-        with open(os.path.join(maint_dir, f)) as fh:
-            out.extend(json.load(fh)["rewrites"])
-    return out
-
-
 def compact_table(
     spark: SparkSession,
     table_dir: str,

@@ -352,12 +352,6 @@ write_zordered.__doc__ = write_zordered.__doc__.format(
 )
 
 
-def files_read_for_filter(df: DataFrame) -> int:
-    """How many distinct parquet files a filtered read actually touches
-    after row-group/file skipping — the measurable effect of layout."""
-    return len(set(df.inputFiles()))
-
-
 # -- small-file compaction --------------------------------------------------
 
 

@@ -1,10 +1,13 @@
 """Parquet table registry.
 
 Single chokepoint for every scan so Catalyst's pushdown/pruning always
-applies (callers select/filter on the returned lazy DataFrame; no DATA
-is ever cached or collected here — only the relation handle for the
-immutable testdata roots is memoized, see _RELATION_CACHE). At 100 TB
-these would be the same calls against a partitioned table location or
+applies: callers select/filter on the returned lazy DataFrame. Nothing
+is kept between calls — each load lists the table's files again, like
+the reference re-listing `dataset/*.tif` on every run — so a rewritten
+directory is always seen. Two loads of one path are distinct objects
+with the same `semanticHash()`, so plan-level reuse (exchange reuse,
+`CacheManager` lookups) still matches across them. At 100 TB these
+would be the same calls against a partitioned table location or
 catalog table — the API shape is identical.
 """
 
@@ -28,54 +31,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Catalog-style relation cache: `spark.read.parquet` costs ~65 ms of
-# driver time per call (footer/schema inference + py4j), paid on EVERY
-# plan build — and the bench/driver rebuild each query's plan from
-# scratch. A returned DataFrame is immutable and reusable, so loads of
-# the driver-generated, never-mutated testdata roots are memoized per
-# (application, dir, table). Paths outside CACHE_ROOTS (pytest tmp
-# dirs that tests write into, sometimes more than once) are NEVER
-# cached — a cached relation would serve a stale file listing. This is
-# what a real catalog (HMS/Unity) does for table metadata at 100 TB:
-# resolve once, plan many.
-#
-# The cache dict lives ON the SparkSession object (round-8 rewrite of
-# the module-global dict): the session -> cache -> DataFrame -> session
-# reference cycle is reclaimed by CPython's cycle collector the moment
-# the caller drops the session, so a long-lived app spinning up many
-# short-lived newSession() objects can no longer grow an unbounded
-# module-level cache or keep discarded sessions alive (pinned by
-# test_relation_cache_does_not_pin_discarded_sessions). Per-session
-# attachment also makes id() recycling across sessions impossible by
-# construction; the applicationId in the key guards the residual case
-# of one session object observed across a context restart.
-CACHE_ROOTS: tuple[str, ...] = ("/root/testdata/",)
-_CACHE_ATTR = "_spark_graft_relation_cache"
-
-
-def _cache_key(spark: SparkSession, sf_dir: str, name: str):
-    if not any(
-        os.path.abspath(sf_dir).startswith(root.rstrip("/") + "/")
-        or os.path.abspath(sf_dir) == root.rstrip("/")
-        for root in CACHE_ROOTS
-    ):
-        return None
-    return (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        name,
-    )
-
-
-def _relation_cache(spark: SparkSession) -> dict:
-    cache = getattr(spark, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _CACHE_ATTR, cache)
-    return cache
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -93,26 +48,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # didn't build (the driver passes its own), so set the runtime
         # conf here, not only in session.py.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = _cache_key(spark, sf_dir, name)
-    cache = _relation_cache(spark) if key is not None else None
-    if cache is not None:
-        # evict entries from another (stopped) application: a handle
-        # minted under a torn-down context points into a dead gateway.
-        # Live entries are bounded by tables x sf_dirs per session.
-        app_id = key[0]
-        stale = [k for k in cache if k[0] != app_id]
-        for k in stale:
-            del cache[k]
-        if key in cache:
-            return cache[key]
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # TIMESTAMP(NANOS) parquet read as long (see session.py); truncate
         # to microseconds — the DuckDB oracle casts TIMESTAMP_NS → TIMESTAMP
         # the same way, so both engines agree to the microsecond.
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if cache is not None:
-        cache[key] = df
     return df
 
 
@@ -131,13 +72,3 @@ def fan_out(spark: SparkSession, df: DataFrame, n: int | None = None) -> DataFra
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register temp views so spark.sql() queries see the same tables."""
-    for n, df in load_tables(spark, sf_dir, *names).items():
-        df.createOrReplaceTempView(n)
